@@ -39,6 +39,8 @@ class Engine:
 
     # -- catalog / SQL ----------------------------------------------------
     def put(self, name: str, df: DataFrame, cache: bool = False) -> DataFrame:
+        """Register ``df`` as ``name``; ``cache=True`` pins small tables on
+        the driver (see :meth:`Catalog.put`)."""
         return self.catalog.put(name, df, cache=cache)
 
     def get(self, name: str) -> DataFrame:

@@ -83,6 +83,10 @@ def upsert(current: DataFrame, updates: DataFrame, key: str | list[str]) -> Data
     return kept.unionByName(updates)
 
 
+def _qualified(alias: str, name: str) -> str:
+    return f"{alias}.`{name.replace('`', '``')}`"
+
+
 def cdc_apply(
     snapshot: DataFrame,
     changes: DataFrame,
@@ -103,30 +107,57 @@ def cdc_apply(
     winner's row replaces the snapshot row (or inserts it). Snapshot
     rows with no change survive untouched.
 
-    Plan: ONE aggregation collapses the feed to its winners
-    (``max_by`` over the (version, op) total order — no window, no
-    sort), one anti-join removes all changed keys from the snapshot,
-    and the surviving upserts union back. Both the aggregation and the
-    anti-join hash on the key, so at scale the feed — typically <<
-    snapshot — is the only shuffled side beyond the snapshot's own
-    key shuffle; writing the result bucketed by key makes the next
-    apply co-located.
+    NULL keys never match: snapshot rows with a NULL key survive, and
+    the feed's NULL-key group inserts its winner like a new key. A
+    winner whose ``op_col`` is NULL removes the key without inserting
+    (NULL sorts below every op, so it only wins a version alone). The
+    feed's payload columns must be the snapshot's columns (any order);
+    otherwise the same ``unionByName`` analysis error is raised. The
+    output keeps the snapshot's column order.
+
+    Plan: the feed is scanned ONCE. One aggregation collapses it to
+    its winners (``max_by`` over the (version, op) total order — no
+    window), one full-outer join on the key meets them with
+    the snapshot, and one projection keeps the snapshot row where no
+    change matched, the winner's payload where it matched, and drops
+    deletes. Both the aggregation and the join hash on the key, so the
+    join reuses the aggregation's partitioning: at scale the feed —
+    typically << snapshot — is the only shuffled side beyond the
+    snapshot's own key shuffle; writing the result bucketed by key
+    makes the next apply co-located. A snapshot key present k times
+    and upserted yields the winner k times (each matched row is
+    replaced, as in SQL MERGE); the snapshot is meant to be keyed.
     """
     keys = [key] if isinstance(key, str) else list(key)
     payload = [c for c in changes.columns if c not in (version_col, op_col)]
+    # analysis only (no job): raises the mismatched-columns error and
+    # gives the widened output types, exactly as the union of kept
+    # snapshot rows and upserts would
+    out = snapshot.unionByName(changes.select(*payload)).schema
     ordk = F.struct(F.col(version_col), F.col(op_col))
-    winners = changes.groupBy(*keys).agg(
+    winners = changes.groupBy(
+        *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)]
+    ).agg(
         F.max_by(F.struct(*payload, F.col(op_col).alias("__op")), ordk).alias(
             "__w"
         )
     )
-    upserts = winners.where(F.col("__w.__op") != delete_op).select(
-        *[F.col(f"__w.{c}").alias(c) for c in payload]
+    s = snapshot.alias("__s")
+    on = [F.col(_qualified("__s", k)) == F.col(f"__k{i}") for i, k in enumerate(keys)]
+    w = F.col("__w")
+    return (
+        s.join(winners, on, "full_outer")
+        .where(w.isNull() | (w.getField("__op") != delete_op))
+        .select(
+            *[
+                F.when(w.isNull(), F.col(_qualified("__s", f.name)))
+                .otherwise(w.getField(f.name))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in out.fields
+            ]
+        )
     )
-    kept = snapshot.join(
-        winners.select(*keys).distinct(), on=keys, how="left_anti"
-    )
-    return kept.unionByName(upserts)
 
 
 def retract_aggregate(

@@ -6,6 +6,15 @@ consumed at ``scripts/tidy/temp-tidy-all-web-files.R:12`` — SURVEY.md §1.1).
 The engine makes that coupling explicit: a catalog of named DataFrames, each
 also registered as a Spark temp view so SQL and DataFrame code share one
 namespace.
+
+Serving path: ``put(cache=True)`` pins a table on the driver when it is
+small — when its optimized-plan ``sizeInBytes`` is at or under
+``spark.sql.autoBroadcastJoinThreshold``, the size Spark already trusts
+to ship whole to every executor. The rows are collected once inside the
+JVM and re-registered as a ``LocalRelation``; Catalyst's
+``ConvertToLocalRelation`` then evaluates filters, projections and
+limits over it on the driver, so a point read launches no Spark job and
+pays only planning. Larger tables keep ``df.cache()``.
 """
 
 from __future__ import annotations
@@ -28,11 +37,28 @@ class Catalog:
         self._tables: dict[str, DataFrame] = {}
 
     def put(self, name: str, df: DataFrame, cache: bool = False) -> DataFrame:
+        """Register ``df`` as ``name`` (replacing any earlier view). With
+        ``cache=True`` a table within the broadcast threshold is pinned
+        on the driver; a larger one is ``df.cache()``-d. Returns the
+        registered frame."""
         if cache:
-            df = df.cache()
+            df = self._pin(df) if self._small(df) else df.cache()
         df.createOrReplaceTempView(name)
         self._tables[name] = df
         return df
+
+    def _small(self, df: DataFrame) -> bool:
+        conf = self.spark._jsparkSession.sessionState().conf()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return int(str(size)) <= conf.autoBroadcastJoinThreshold()
+
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """Collect ``df`` in the JVM and rebuild it as a LocalRelation."""
+        jdf = df._jdf
+        local = self.spark._jsparkSession.createDataFrame(
+            jdf.collectAsList(), jdf.schema()
+        )
+        return DataFrame(local, self.spark)
 
     def get(self, name: str) -> DataFrame:
         return self._tables[name]

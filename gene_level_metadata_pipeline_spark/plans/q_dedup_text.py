@@ -4146,14 +4146,9 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 10 == 0
     )
     sh = word_shingles(docs, text_col="text", id_col="doc_id", n=1)
-    # materialize_tokens=False (r11): the 1-in-10 sample is ~500 docs at
-    # sf0.1 — far too small to amortize a checkpoint-materialization
-    # job; let Catalyst re-expand the tiny subtree per consumer instead
-    # (A/B in OPTIMIZATION_r11.md; corpus-sized callers keep the
-    # default materialization).
     pairs = set_similarity_join(
         sh, id_col="doc_id", token_col="shingle",
-        threshold_num=1, threshold_den=2, materialize_tokens=False,
+        threshold_num=1, threshold_den=2,
     )
     bucketed = pairs.groupBy(
         (F.col("jac_e6") - F.pmod("jac_e6", F.lit(100000)))

@@ -1313,7 +1313,8 @@ def q_cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 (net latest-wins) — applied onto the orders snapshot. The
     MERGE-with-deletes that plain upsert_merge lacks: per-key winner is
     ONE max_by aggregation over the (version, op) total order (no
-    window sort), then anti-join + union. Deletes must REMOVE rows and
+    window sort), then one full-outer join with the snapshot and a
+    projection. Deletes must REMOVE rows and
     stale v1 updates must lose to v2 — both outcomes the oracle's
     row_number replay certifies exactly."""
     from gene_level_metadata_pipeline_spark.operators.harmonize import (

@@ -8,8 +8,9 @@ Defaults are chosen for the 100 TB design target (SURVEY.md §4):
   * AQE on — runtime join-strategy re-planning, skew-join splitting,
     partition coalescing.
   * Arrow on — any unavoidable pandas interchange is vectorized.
-  * shuffle partitions sized from the env (local test rig uses 32; a real
-    cluster overrides via ``spark.sql.shuffle.partitions`` in spark-submit).
+  * shuffle partitions sized from the env (default: one per local core; a
+    real cluster overrides via ``spark.sql.shuffle.partitions`` in
+    spark-submit).
 """
 
 from __future__ import annotations
@@ -57,11 +58,12 @@ DEFAULT_CONFIG: dict[str, str] = {
 def get_spark(app_name: str = "gene-level-metadata-pipeline-spark") -> SparkSession:
     """Return (or create) the engine's SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default 32) and sets
-    ``spark.sql.shuffle.partitions`` to match so small-SF runs don't pay for
-    200 empty reducers while cluster runs can override externally.
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default: the host's
+    core count, ``os.cpu_count()``) and sets ``spark.sql.shuffle.partitions``
+    to match so small-SF runs don't pay for 200 empty reducers while
+    cluster runs can override externally.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     # Shuffle partitions default to the core count (right for the small-SF
     # rig) but scale independently: at 30x-replica stress volumes the
     # per-partition shuffle blocks outgrow the in-memory sort buffers and

@@ -81,10 +81,11 @@ def write_compacted(
       writing — one shuffle, balanced files, the right choice for final
       published tables.
 
-    Returns the number of files written.
+    Returns the number of files written, listed through the path's
+    Hadoop ``FileSystem`` so any URI the writer accepts (``file://``,
+    ``s3a://``, ``hdfs://``) works.
     """
     import math
-    import os
 
     if exact:
         n = df.count()
@@ -96,4 +97,9 @@ def write_compacted(
             .mode(mode)
             .parquet(path)
         )
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    spark = df.sparkSession
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return sum(
+        1 for st in fs.listStatus(jpath) if st.getPath().getName().endswith(".parquet")
+    )

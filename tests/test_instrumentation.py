@@ -64,6 +64,16 @@ def test_write_compacted_caps_rows_per_file(spark, tmp_path):
     assert back.count() == 1000
 
 
+def test_write_compacted_counts_files_at_uri_path(spark, tmp_path):
+    # a scheme-qualified path is listed through its Hadoop FileSystem,
+    # not the local os module
+    uri = (tmp_path / "uri").as_uri()
+    assert uri.startswith("file:///")
+    df = spark.range(0, 1000).coalesce(1)
+    assert write_compacted(df, uri, target_rows_per_file=300) == 4
+    assert spark.read.parquet(uri).count() == 1000
+
+
 def test_orc_roundtrip(spark, tmp_path):
     # second columnar format certified end-to-end (ORC is Spark-native)
     src = spark.range(0, 100).select(
